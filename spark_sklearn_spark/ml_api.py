@@ -67,6 +67,9 @@ class GridSearchCV:
         # across engines/runs — the sklearn `cv=iterable` analogue —
         # where the default rand(seed) split is engine-internal.
         self.fold_col = fold_col
+        self._best_model = None
+        self._fit_df = None
+        self._grid_cache = None
 
     def _grid(self):
         from pyspark.ml.tuning import ParamGridBuilder
@@ -157,6 +160,7 @@ class GridSearchCV:
         from concurrent.futures import ThreadPoolExecutor
 
         from pyspark.storagelevel import StorageLevel
+        from pyspark.util import inheritable_thread_target
 
         cached_here = df.storageLevel == StorageLevel.NONE
         if cached_here:
@@ -167,6 +171,10 @@ class GridSearchCV:
             test = df.filter(F.col(self.fold_col) == f).drop(self.fold_col)
             fold_datasets.append((train, test))
 
+        # inheritable_thread_target carries the caller's job group,
+        # scheduler pool and tags into the fit threads, as in
+        # CrossValidator
+        @inheritable_thread_target(df.sparkSession)
         def one(task):
             i, f = task
             train, test = fold_datasets[f]
@@ -175,7 +183,17 @@ class GridSearchCV:
 
         tasks = [(i, f) for i in range(len(grid)) for f in range(self.cv)]
         metrics = np.zeros(len(grid))
+        fold = F.col(self.fold_col)
         try:
+            # CrossValidator's kFold rejects out-of-range folds; a NULL
+            # or stray fold would otherwise join every training split
+            # and no validation split, silently skewing the metrics
+            if not df.filter(
+                fold.isNull() | (fold < 0) | (fold >= self.cv)
+            ).isEmpty():
+                raise ValueError(
+                    f"{self.fold_col} must be non-NULL and in [0, {self.cv})"
+                )
             with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
                 for i, m in pool.map(one, tasks):
                     metrics[i] += m / self.cv
@@ -193,6 +211,8 @@ class GridSearchCV:
         explicit-fold path: the refit is a full extra fit the search
         itself never consumes, so it runs on first access only."""
         if self._best_model is None:
+            if self._fit_df is None:
+                raise RuntimeError("best_model_ is only available after fit()")
             self._best_model = self.estimator.fit(
                 self._fit_df.drop(self.fold_col),
                 self._grid_cache[self.best_index_],

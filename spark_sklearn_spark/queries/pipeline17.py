@@ -21,7 +21,7 @@ import os
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load, warehouse_path
+from ..sources.io import load, snapshot
 from ._helpers import sql_h56
 
 # --------------------------------------------------------------------------
@@ -52,24 +52,16 @@ _BINFILE_ORACLE = f"""
     ORDER BY source
 """
 
-_BINFILE_CACHE: dict[tuple[str, str], str] = {}
-
-
 @query("q_source_binaryfile", oracle=_BINFILE_ORACLE)
 def q_source_binaryfile(spark, d):
     """binaryFile source roundtrip (module comment): materialize one
-    file per source executor-side, read back via the binaryFile
-    format, hash the bytes. The write is a foreachPartition over the
-    |sources|-bounded content relation; the read is a real
-    spark.read.format('binaryFile') scan."""
-    key = (spark.sparkContext.applicationId, d)
-    out_dir = _BINFILE_CACHE.get(key)
-    if out_dir is None:
-        out_dir = warehouse_path("binfiles", d)
-        import shutil
+    file per source executor-side (a snapshot memo), read back via the
+    binaryFile format, hash the bytes. The write is a
+    foreachPartition over the |sources|-bounded content relation; the
+    read is a real spark.read.format('binaryFile') scan."""
 
-        shutil.rmtree(out_dir, ignore_errors=True)
-        os.makedirs(out_dir, exist_ok=True)
+    def write(out_dir):
+        os.makedirs(out_dir)
         docs = load(spark, d, "documents")
         contents = (
             docs.select("source", "doc_id", "text")
@@ -93,7 +85,8 @@ def q_source_binaryfile(spark, d):
                     fh.write(r["content"].encode("utf-8"))
 
         contents.foreachPartition(write_files)
-        _BINFILE_CACHE[key] = out_dir
+
+    out_dir = snapshot(spark, "binfiles", d, write)
     bin_df = spark.read.format("binaryFile").load(out_dir)
     return (
         bin_df.select(

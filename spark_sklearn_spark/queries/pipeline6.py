@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..registry import query
-from ..sources.io import load
+from ..sources.io import load, snapshot
 from ._helpers import DEC
 from .pipeline2 import _BIGRAMS_SQL
 
@@ -1138,20 +1138,14 @@ def q_win_pareto(spark, d):
 # Semantic-tier dedup clusters (components over embedding-LSH pairs)
 # --------------------------------------------------------------------------
 
-_SEMANTIC_COMP_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _semantic_components(spark, d):
     """(vec_id, cluster_id) over the planted SRP-LSH pair set,
-    memoized to parquet per (application, sf_dir) — same posture as
-    pipeline.dup_components."""
+    memoized (sources/io.snapshot)."""
     from ..operators.components import connected_components
     from ..operators.srp import srp_near_dup_pairs
-    from ..sources.io import warehouse_path
 
-    key = (spark.sparkContext.applicationId, d)
-    path = _SEMANTIC_COMP_CACHE.get(key)
-    if path is None:
+    def write(path):
         emb = load(spark, d, "embeddings")
         base = emb.select("vec_id", "embedding")
         copies = emb.filter(F.col("vec_id") % 20 == 0).select(
@@ -1164,13 +1158,11 @@ def _semantic_components(spark, d):
         pairs = srp_near_dup_pairs(
             planted, "vec_id", "embedding", threshold=0.98
         ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        comp = connected_components(
+        connected_components(
             planted.select("vec_id"), pairs, "vec_id", "src", "dst"
-        )
-        path = warehouse_path("semantic_components", d)
-        comp.write.mode("overwrite").parquet(path)
-        _SEMANTIC_COMP_CACHE[key] = path
-    return spark.read.parquet(path)
+        ).write.parquet(path)
+
+    return spark.read.parquet(snapshot(spark, "semantic_components", d, write))
 
 
 @query(
@@ -1340,23 +1332,18 @@ def q_behavior_attribution(spark, d):
 # Partition-pruned source (hive-style partitioning + pruning)
 # --------------------------------------------------------------------------
 
-_PARTITIONED_EVENTS_CACHE: dict[tuple[str, str], str] = {}
-
 
 def partitioned_events(spark, d) -> str:
     """Events written ONCE per (application, sf_dir) as a hive-style
     event_type-partitioned parquet layout; returns the path."""
-    from ..sources.io import warehouse_path, write_parquet
+    from ..sources.io import write_parquet
 
-    key = (spark.sparkContext.applicationId, d)
-    path = _PARTITIONED_EVENTS_CACHE.get(key)
-    if path is None:
-        path = warehouse_path("events_by_type", d)
-        write_parquet(
+    return snapshot(
+        spark, "events_by_type", d,
+        lambda path: write_parquet(
             load(spark, d, "events"), path, partition_by=["event_type"]
-        )
-        _PARTITIONED_EVENTS_CACHE[key] = path
-    return path
+        ),
+    )
 
 
 @query(

@@ -61,6 +61,82 @@ def test_randomized_search_cv(spark, features_df):
     assert len(rs.cv_results_) == 2
 
 
+def _with_folds(df):
+    """features_df plus a deterministic two-way fold column."""
+    from pyspark.sql.window import Window
+
+    order = Window.orderBy("label", F.col("features").cast("string"))
+    return df.withColumn("fold", (F.row_number().over(order) % 2).cast("int"))
+
+
+def test_fold_col_search_matches_cross_validator(spark, features_df):
+    """The explicit-fold fan-out reproduces CrossValidator(foldCol=...)
+    avgMetrics candidate for candidate."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
+
+    df = _with_folds(features_df).persist()
+    lr = LogisticRegression(maxIter=10)
+    regs = [0.01, 0.1, 1.0]
+    gs = GridSearchCV(lr, {"regParam": regs}, cv=2, fold_col="fold").fit(df)
+    cv = CrossValidator(
+        estimator=lr,
+        estimatorParamMaps=ParamGridBuilder().addGrid(lr.regParam, regs).build(),
+        evaluator=MulticlassClassificationEvaluator(metricName="accuracy"),
+        numFolds=2,
+        foldCol="fold",
+    ).fit(df)
+    got = [r["mean_test_score"] for r in gs.cv_results_]
+    assert got == pytest.approx(list(cv.avgMetrics), abs=1e-12)
+    df.unpersist()
+
+
+@pytest.mark.parametrize(
+    "bad", ["fold + 2", "fold - 1", "CASE WHEN fold = 0 THEN NULL ELSE fold END"]
+)
+def test_fold_col_rejects_bad_fold(spark, features_df, bad):
+    from pyspark.ml.classification import LogisticRegression
+
+    df = _with_folds(features_df).withColumn("fold", F.expr(bad))
+    gs = GridSearchCV(
+        LogisticRegression(maxIter=2), {"regParam": [0.1]}, cv=2, fold_col="fold"
+    )
+    with pytest.raises(ValueError, match="fold"):
+        gs.fit(df)
+
+
+def test_best_model_before_fit_raises():
+    from pyspark.ml.classification import LogisticRegression
+
+    gs = GridSearchCV(LogisticRegression(), {"regParam": [0.1]}, fold_col="f")
+    with pytest.raises(RuntimeError, match="fit"):
+        gs.best_model_
+
+
+def test_fold_col_fits_keep_caller_job_group(spark, features_df):
+    """Every candidate x fold fit runs in the caller's job group, so
+    cancelJobGroup reaches the fan-out."""
+    from pyspark.ml.classification import LogisticRegression
+
+    sc = spark.sparkContext
+    df = _with_folds(features_df)
+    sc.setJobGroup("fold_col_search", "test")
+    try:
+        GridSearchCV(
+            LogisticRegression(maxIter=2),
+            {"regParam": [0.1, 1.0]},
+            cv=2,
+            fold_col="fold",
+        ).fit(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    # 2 candidates x 2 folds, each at least one fit and one evaluate job
+    assert len(sc.statusTracker().getJobIdsForGroup("fold_col_search")) >= 8
+
+
 def test_keyed_estimator_roundtrip(spark):
     """Per-key OLS through the full fit→models-DF→transform path must
     reproduce each group's closed-form fit."""
