@@ -28,9 +28,10 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Iteration order is driver-priority (``registry.DRIVER_PRIORITY``):
-    the differential harness checks a 50-key prefix, so keys without a
-    prior driver-green row come first.
+    Iteration order is the driver rotation (``registry.ordered_queries``):
+    the differential harness checks a 50-key prefix, so ``registry.HEAD``
+    (canary + recently changed keys) comes first, then the rest stalest
+    first by their latest round in the committed CORRECTNESS_r*.json.
     """
     return _registry.ordered_queries()
 

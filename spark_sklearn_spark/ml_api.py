@@ -13,7 +13,9 @@ Deliberate deltas from the reference (documented, not hidden):
   (`grid_search.py` ≈L190-260 broadcast X,y to every executor — the
   pattern that stops working the moment X outgrows one machine).
 - Candidate×fold fan-out (`base_search.py#_fit` ≈L60-180,
-  sc.parallelize one task per tuple) is CrossValidator(parallelism=N).
+  sc.parallelize one task per tuple) is one thread-pool wave of MLlib
+  fits over CrossValidator's folds (its rand(seed) split, or a
+  caller-supplied fold column), with a lazy best-model refit.
 
 Per-key models keep the reference's data model exactly
 (`keyed_models.py` ≈L30-320): a models DataFrame of
@@ -92,10 +94,7 @@ class GridSearchCV:
         cv_results_ and returns self (sklearn-style)."""
         grid = self._grid()
         evaluator = self._evaluator()  # one instance: CV + direction check
-        if self.fold_col:
-            avg_metrics = self._fit_foldcol(df, grid, evaluator)
-        else:
-            avg_metrics = self._fit_cv(df, grid, evaluator)
+        avg_metrics = self._fit_folds(df, grid, evaluator)
         self.cv_results_ = [
             {
                 "params": {p.name: v for p, v in pm.items()},
@@ -115,45 +114,17 @@ class GridSearchCV:
         self.best_score_ = self.cv_results_[best]["mean_test_score"]
         return self
 
-    def _fit_cv(self, df: DataFrame, grid, evaluator) -> list[float]:
-        """Default-split path: delegate to CrossValidator (its rand(seed)
-        kFold split is engine-internal and must stay MLlib's own)."""
-        from pyspark.ml.tuning import CrossValidator
-        from pyspark.storagelevel import StorageLevel
-
-        cv = CrossValidator(
-            estimator=self.estimator,
-            estimatorParamMaps=grid,
-            evaluator=evaluator,
-            numFolds=self.cv,
-            parallelism=self.parallelism,
-            seed=self.seed,
-        )
-        # CrossValidator recomputes its input for every candidate×fold
-        # fit; caching it is the distributed analogue of the
-        # reference's broadcast of X/y (grid_search.py ≈L190-260) —
-        # measured 2.5× on the embeddings fixture. Respect an existing
-        # persist; release ours when done.
-        cached_here = df.storageLevel == StorageLevel.NONE
-        if cached_here:
-            df = df.persist()
-        try:
-            model = cv.fit(df)
-        finally:
-            if cached_here:
-                df.unpersist()
-        self._best_model = model.bestModel
-        return list(model.avgMetrics)
-
-    def _fit_foldcol(self, df: DataFrame, grid, evaluator) -> list[float]:
-        """Explicit-fold path: fan ALL candidate×fold fits out in ONE
-        thread-pool wave (the reference's base_search.py#_fit posture —
-        one task per (candidate, fold) tuple) instead of
-        CrossValidator's sequential per-fold waves, and skip its final
-        best-model refit on the full data (best_model_ refits lazily on
-        first access). Semantics match CrossValidator with foldCol
-        exactly: validation = rows where fold == i, training = the
-        rest, avgMetric = mean over folds of
+    def _fit_folds(self, df: DataFrame, grid, evaluator) -> list[float]:
+        """Fan ALL candidate×fold fits out in ONE thread-pool wave (the
+        reference's base_search.py#_fit posture — one task per
+        (candidate, fold) tuple) instead of CrossValidator's sequential
+        per-fold waves, and skip its final best-model refit on the full
+        data (best_model_ refits lazily on first access). Semantics
+        match CrossValidator exactly: fold i validates on the rows with
+        fold_col == i, or by default on the rows with
+        i/cv <= rand(seed) < (i+1)/cv (CrossValidator._kFold, with rand
+        computed on the persisted input), and trains on the rest;
+        avgMetric = mean over folds of
         evaluator.evaluate(model.transform(validation)). r18 measured
         the grid query 5.0 -> ~2.9 s quiet (3 fit waves + 0.9 s refit
         -> 1 wave, no refit)."""
@@ -162,14 +133,30 @@ class GridSearchCV:
         from pyspark.storagelevel import StorageLevel
         from pyspark.util import inheritable_thread_target
 
+        # every candidate×fold fit rescans the input; caching it is the
+        # distributed analogue of the reference's broadcast of X/y
+        # (grid_search.py ≈L190-260). Respect an existing persist.
         cached_here = df.storageLevel == StorageLevel.NONE
         if cached_here:
             df = df.persist()
-        fold_datasets = []
-        for f in range(self.cv):
-            train = df.filter(F.col(self.fold_col) != f).drop(self.fold_col)
-            test = df.filter(F.col(self.fold_col) == f).drop(self.fold_col)
-            fold_datasets.append((train, test))
+        if self.fold_col:
+            split_col, data = self.fold_col, df
+            fold = F.col(split_col)
+            # CrossValidator's kFold rejects out-of-range folds; a NULL
+            # or stray fold would otherwise join every training split
+            # and no validation split, silently skewing the metrics
+            bad = fold.isNull() | (fold < 0) | (fold >= self.cv)
+            validates = [fold == f for f in range(self.cv)]
+        else:
+            bad = None
+            split_col, h = "__cv_rand", 1.0 / self.cv
+            data = df.select("*", F.rand(self.seed).alias(split_col))
+            r = F.col(split_col)
+            validates = [(r >= f * h) & (r < (f + 1) * h) for f in range(self.cv)]
+        fold_datasets = [
+            (data.filter(~v).drop(split_col), data.filter(v).drop(split_col))
+            for v in validates
+        ]
 
         # inheritable_thread_target carries the caller's job group,
         # scheduler pool and tags into the fit threads, as in
@@ -179,43 +166,36 @@ class GridSearchCV:
             i, f = task
             train, test = fold_datasets[f]
             model = self.estimator.fit(train, grid[i])
-            return i, evaluator.evaluate(model.transform(test))
+            return i, f, evaluator.evaluate(model.transform(test))
 
         tasks = [(i, f) for i in range(len(grid)) for f in range(self.cv)]
-        metrics = np.zeros(len(grid))
-        fold = F.col(self.fold_col)
+        metrics = np.zeros((self.cv, len(grid)))
         try:
-            # CrossValidator's kFold rejects out-of-range folds; a NULL
-            # or stray fold would otherwise join every training split
-            # and no validation split, silently skewing the metrics
-            if not df.filter(
-                fold.isNull() | (fold < 0) | (fold >= self.cv)
-            ).isEmpty():
+            if bad is not None and not df.filter(bad).isEmpty():
                 raise ValueError(
                     f"{self.fold_col} must be non-NULL and in [0, {self.cv})"
                 )
             with ThreadPoolExecutor(max_workers=self.parallelism) as pool:
-                for i, m in pool.map(one, tasks):
-                    metrics[i] += m / self.cv
+                for i, f, m in pool.map(one, tasks):
+                    metrics[f, i] = m
         finally:
             if cached_here:
                 df.unpersist()
         self._best_model = None
-        self._fit_df = df
+        self._fit_df = df.drop(self.fold_col) if self.fold_col else df
         self._grid_cache = grid
-        return metrics.tolist()
+        return np.mean(metrics, axis=0).tolist()
 
     @property
     def best_model_(self):
-        """The best candidate refit on the full data. Lazy on the
-        explicit-fold path: the refit is a full extra fit the search
-        itself never consumes, so it runs on first access only."""
+        """The best candidate refit on the full data. Lazy: the refit
+        is a full extra fit the search itself never consumes, so it
+        runs on first access only."""
         if self._best_model is None:
             if self._fit_df is None:
                 raise RuntimeError("best_model_ is only available after fit()")
             self._best_model = self.estimator.fit(
-                self._fit_df.drop(self.fold_col),
-                self._grid_cache[self.best_index_],
+                self._fit_df, self._grid_cache[self.best_index_]
             )
         return self._best_model
 
@@ -378,7 +358,7 @@ class KeyedEstimator:
         )
         schema = f"{key_schema}, __model binary"
 
-        def fit_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def fit_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             X = pdf[x_cols].to_numpy(dtype="float64")
             y = pdf[y_col].to_numpy(dtype="float64") if y_col else None
             model = fit_fn(X, y)

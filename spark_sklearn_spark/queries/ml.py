@@ -5,10 +5,11 @@ The reference's purpose was distributing sklearn model selection over
 Spark: ``python/spark_sklearn/grid_search.py#GridSearchCV`` (≈L1-330)
 and ``random_search.py#RandomizedSearchCV`` broadcast X/y and fan
 candidate×fold fits out as one task each
-(``base_search.py#_fit`` ≈L60-180). On modern Spark that machinery IS
-``pyspark.ml.tuning.CrossValidator(parallelism=N)`` — candidate×fold
-fits run concurrently against distributed data, no broadcast of a
-materialized matrix, no driver-side collect of fitted models.
+(``base_search.py#_fit`` ≈L60-180). Here that machinery is
+``ml_api.GridSearchCV``: one thread-pool wave of MLlib candidate×fold
+fits over CrossValidator's folds, against distributed data — no
+broadcast of a materialized matrix, no driver-side collect of fitted
+models.
 sklearn itself is absent on this machine (SURVEY §0), so estimators
 are MLlib (LogisticRegression on the embeddings table).
 
@@ -51,22 +52,6 @@ def _features_df(spark, d):
     )
 
 
-def _results_df(spark, search):
-    """cv_results_ → small DataFrame (the reference's cv_results_
-    shape, grid_search.py#fit). One row per candidate."""
-    rows = [
-        (
-            float(r["params"]["regParam"]),
-            float(r["params"].get("elasticNetParam", 0.0)),
-            round(float(r["mean_test_score"]), 6),
-        )
-        for r in search.cv_results_
-    ]
-    return spark.createDataFrame(
-        rows, "reg_param double, elastic_net double, avg_accuracy double"
-    ).orderBy("reg_param", "elastic_net")
-
-
 _GRID_SEARCH_ORACLE = f"""
     WITH grid AS (
       SELECT CAST(g.rp AS DOUBLE) AS reg_param,
@@ -99,8 +84,8 @@ def q_ml_grid_search(spark, d):
     What is hash-checked: the candidate×fold SHAPE — the param grid
     the fit actually enumerated (params read back from cv_results_,
     NOT re-typed constants), the fold assignment, and the fold sizes.
-    The split is reproducible by construction: GridSearchCV passes a
-    portable h56(vec_id)%3 foldCol to CrossValidator, so DuckDB
+    The split is reproducible by construction: the query passes a
+    portable h56(vec_id)%3 fold_col to GridSearchCV, so DuckDB
     rebuilds the exact fold sizes from the raw table. avgMetric stays
     engine-side (MLlib LBFGS is not SQL-expressible); metric-direction
     and best-params invariants are pinned in tests/test_ml_api.py.
@@ -281,7 +266,7 @@ def _keyed_models(spark, d):
         F.size(F.split("text", " ")).cast("double").alias("x"),
     )
 
-    def fit_one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit_one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf["x"].to_numpy()
         y = pdf["n_chars"].to_numpy(dtype="float64")
         xm, ym = x.mean(), y.mean()

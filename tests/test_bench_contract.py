@@ -1,10 +1,6 @@
-"""Round-18 gates (optimization round 2/2): the r18 driver-window
-rotation pin — head = canary + the 10 keys whose Spark-side
-implementation was restructured this round (results value-identical,
-oracles untouched), tail = (latest-sample round, name) staleness order
-— and the bench driver-contract guard (VERDICT r17 item 8): bench.py
-must honor $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS and emit one line
-of valid JSON, asserted by running it, not by inspection.
+"""bench.py driver contract: it must honor $SPARK_GRAFT_SF_DIR /
+$SPARK_GRAFT_CPUS and emit one line of valid JSON, asserted by
+running it, not by inspection.
 """
 
 from __future__ import annotations
@@ -17,55 +13,6 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# The 10 r18-restructured keys, in their pinned head order (slot 0 is
-# the canary). See registry.py's rotation comment for what changed in
-# each.
-R18_CHANGED = [
-    "q_dedup_recall_minhash",
-    "q_dedup_incremental",
-    "q_dedup_editdist",
-    "q_graph_copurchase",
-    "q_ml_grid_search",
-    "q_ml_random_search",
-    "q_ml_kcenter_init",
-    "q_dedup_cdc",
-    "q_dedup_minhash",
-    "q_ml_label_noise_knn",
-]
-
-
-def test_window_head_is_canary_plus_changed_keys():
-    from spark_sklearn_spark.registry import DRIVER_PRIORITY
-
-    assert DRIVER_PRIORITY[:11] == ["q_dq_engine_canary", *R18_CHANGED]
-
-
-def test_priority_tail_is_staleness_ordered():
-    """Behind the 11-key head the list is (latest-sample round, name)
-    sorted — recomputed from CORRECTNESS_r1..r17 at rotation time.
-    The 50-key window carries the 12 remaining r8-band keys and the
-    name-first slice of the r9 band."""
-    import glob
-    import re
-
-    from spark_sklearn_spark.registry import DRIVER_PRIORITY
-
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        if rnd >= 18:
-            continue  # rotation derives from pre-r18 evidence only
-        for k in json.load(open(f)):
-            latest[k] = max(latest.get(k, 0), rnd)
-    tail = DRIVER_PRIORITY[11:]
-    keys_rounds = [(latest.get(k, 0), k) for k in tail]
-    assert keys_rounds == sorted(keys_rounds)
-
-
-# ---------------------------------------------------------------------------
-# Bench driver-contract guard (VERDICT r17 item 8)
-# ---------------------------------------------------------------------------
 
 
 def test_bench_honors_sf_dir_env_without_argv():

@@ -4,6 +4,8 @@ Converter) driven the way a spark_sklearn user would."""
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -69,26 +71,45 @@ def _with_folds(df):
     return df.withColumn("fold", (F.row_number().over(order) % 2).cast("int"))
 
 
-def test_fold_col_search_matches_cross_validator(spark, features_df):
-    """The explicit-fold fan-out reproduces CrossValidator(foldCol=...)
-    avgMetrics candidate for candidate."""
+def _assert_matches_cross_validator(df, **cv_params):
+    """GridSearchCV over a regParam grid reports the avgMetrics of
+    CrossValidator(**cv_params) candidate for candidate."""
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    df = _with_folds(features_df).persist()
     lr = LogisticRegression(maxIter=10)
     regs = [0.01, 0.1, 1.0]
-    gs = GridSearchCV(lr, {"regParam": regs}, cv=2, fold_col="fold").fit(df)
+    gs = GridSearchCV(
+        lr, {"regParam": regs}, cv=cv_params["numFolds"],
+        seed=cv_params.get("seed", 42), fold_col=cv_params.get("foldCol"),
+    ).fit(df)
     cv = CrossValidator(
         estimator=lr,
         estimatorParamMaps=ParamGridBuilder().addGrid(lr.regParam, regs).build(),
         evaluator=MulticlassClassificationEvaluator(metricName="accuracy"),
-        numFolds=2,
-        foldCol="fold",
+        **cv_params,
     ).fit(df)
     got = [r["mean_test_score"] for r in gs.cv_results_]
     assert got == pytest.approx(list(cv.avgMetrics), abs=1e-12)
+
+
+def test_fold_col_search_matches_cross_validator(spark, features_df):
+    """The explicit-fold fan-out reproduces CrossValidator(foldCol=...)
+    avgMetrics candidate for candidate."""
+    df = _with_folds(features_df).persist()
+    _assert_matches_cross_validator(df, numFolds=2, foldCol="fold")
+    df.unpersist()
+
+
+def test_default_split_matches_cross_validator(spark, features_df):
+    """Without fold_col the one-wave fan-out splits on rand(seed)
+    exactly as CrossValidator(numFolds, seed) does. The input is
+    persisted for both: unpersisted, CrossValidator would fold the
+    createDataFrame LocalRelation on the driver, drawing every row's
+    rand from one partition seed."""
+    df = features_df.persist()
+    _assert_matches_cross_validator(df, numFolds=3, seed=7)
     df.unpersist()
 
 
@@ -150,7 +171,11 @@ def test_keyed_estimator_roundtrip(spark):
             )
         )
     df = spark.createDataFrame(pd.concat(frames))
-    model = KeyedEstimator(["k"], ["x"], "y", output_col="pred").fit(df)
+    # fit_one's type hints let applyInPandas infer its eval type; an
+    # unannotated key makes PySpark warn on every fit
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        model = KeyedEstimator(["k"], ["x"], "y", output_col="pred").fit(df)
     assert model.model_df.count() == 2
     out = model.transform(df).withColumn(
         "err", F.abs(F.col("pred") - F.col("y"))

@@ -34,23 +34,6 @@ def test_every_query_has_docstring_and_registration(registry):
     assert set(oracles) <= set(queries)
 
 
-def test_driver_priority_names_are_registered(registry):
-    """Every DRIVER_PRIORITY name must be a registered query —
-    ordered_queries() silently drops unknown names, so a phantom entry
-    wastes one of the 50 driver-checked slots (VERDICT r3 item 4: five
-    pinned-but-unimplemented keys went unnoticed for a round)."""
-    from spark_sklearn_spark.registry import DRIVER_PRIORITY
-
-    queries, _ = registry
-    phantom = set(DRIVER_PRIORITY) - set(queries)
-    assert not phantom, f"DRIVER_PRIORITY pins unregistered queries: {sorted(phantom)}"
-    assert len(DRIVER_PRIORITY) == len(set(DRIVER_PRIORITY)), "duplicate priority keys"
-    assert len(DRIVER_PRIORITY) >= 50, (
-        "driver checks the first 50 keys; a shorter priority list leaves "
-        "slots to registration-order luck"
-    )
-
-
 def test_baseline_table_covers_registry(registry):
     """bench.py's regression gate parses BASELINE.md with a
     silent-on-miss regex (baseline_walls): a malformed table edit

@@ -408,17 +408,6 @@ def test_survey_2b_one_row_per_key():
     assert not missing, f"registered keys missing a SURVEY row: {missing}"
 
 
-def test_driver_priority_is_complete_and_unique():
-    """Every registered key appears exactly once in DRIVER_PRIORITY —
-    a key missing from the list would silently fall to dict-insertion
-    order behind the 50-key window forever."""
-    import __spark_entry__ as entry
-    from spark_sklearn_spark.registry import DRIVER_PRIORITY
-
-    qs = entry.queries()
-    assert len(DRIVER_PRIORITY) == len(set(DRIVER_PRIORITY))
-    assert set(DRIVER_PRIORITY) == set(qs)
-
 FIXTURES = [
     "/root/testdata/sf0.001",
     "/root/testdata/sf0.01",
